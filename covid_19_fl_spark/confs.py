@@ -17,9 +17,10 @@ than one instance:
   a query's semantics can no longer depend on execution order, because
   the session is reset to the same state at every entry.
 * ``scoped_conf`` is the only sanctioned way for a query to deviate:
-  a context manager that restores the previous value on exit (the
-  pattern ``_stream_shuffle_partitions`` / ``_stream_state_store``
-  in suite_r4 established).
+  a context manager that restores the previous value on exit (e.g.
+  the drain-time shuffle width and state store that
+  ``streaming.pipeline.run_available_now`` scopes over every bounded
+  drain).
 * ``tests/test_conf_discipline.py`` lints the source tree: any
   ``spark.conf.set`` outside this module / a context manager fails CI.
 

@@ -1,4 +1,4 @@
-"""Incremental-load semantics (SURVEY §2.8 U3, §2.4 J3/J4, §2.2 K4/K5).
+"""Incremental-load semantics (SURVEY §2.8 U3, §2.4 J3/J4, §2.2 K4).
 
 The reference implements incrementality imperatively: a Mongo $max probe
 plus a per-row filter for appends (cv.py:93-110), and a per-row
@@ -96,12 +96,6 @@ def merge_update(
             c, F.when(F.col("__matched").isNotNull(), F.col(f"__u_{c}")).otherwise(F.col(c))
         )
     return out.drop("__matched", *[f"__u_{c}" for c in update_cols])
-
-
-def count_delta(new_df: DataFrame, old_df: DataFrame) -> int:
-    """K5 — row-count delta metric computed before a full refresh
-    (cv-api.py:185-186). Two partial-agg counts, no data movement."""
-    return new_df.count() - old_df.count()
 
 
 def join_view_delta(

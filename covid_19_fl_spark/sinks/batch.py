@@ -198,10 +198,13 @@ class ParquetTable:
             return False
         parent = os.path.dirname(os.path.abspath(self.path)) or "."
         base = os.path.basename(self.path)
-        cands = sorted(
-            f for f in os.listdir(parent) if f.startswith(base + ".old-")
-        ) if os.path.isdir(parent) else []
+        # The .old-* suffix is random, so "newest" is by mtime, not name.
+        cands = [
+            os.path.join(parent, f)
+            for f in (os.listdir(parent) if os.path.isdir(parent) else [])
+            if f.startswith(base + ".old-")
+        ]
         if not cands:
             return False
-        os.rename(os.path.join(parent, cands[-1]), self.path)
+        os.rename(max(cands, key=os.path.getmtime), self.path)
         return True

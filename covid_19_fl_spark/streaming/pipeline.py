@@ -15,17 +15,134 @@ continuous micro-batch plans:
 State is bounded by the watermark (the reference bounded it by full
 refresh); at scale the dedup state is per-key in the state store,
 partitioned by key hash across executors.
+
+A scheduled re-run over the corpus is a BOUNDED drain: the registry's
+``st_*`` queries read ``tables.load_stream`` sources, build their own
+sink, and hand the writer to ``run_available_now``, the one place that
+owns the trigger, the drain-time confs, the timeout and the stop.
 """
 
 from __future__ import annotations
 
+import os
+import re
+import shutil
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from .. import tables
+from ..confs import scoped_conf
 from ..sinks.batch import ParquetTable
+
+# Shuffle width of every bounded drain. Streaming state costs per
+# PARTITION (a state store instance plus commit/delta files per
+# micro-batch), so a bare 200-partition session spends more on store
+# maintenance than on rows (stream-stream join at sf0.1: 20 s → 3.3 s).
+# Measured at sf0.1: 8 and 16 equal, 32 is 1.4× slower (per-store fixed
+# cost dominates tiny stores). A cluster sizes it to state volume ÷
+# target per-store size.
+DRAIN_SHUFFLE_PARTITIONS = 16
+# One bound for every drain, the largest any drain has needed (the
+# data-sized joins on the 100× corpus). Only a failure reaches it.
+DRAIN_TIMEOUT_S = 600
+_ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+
+
+def run_available_now(
+    spark: SparkSession, writer: DataStreamWriter, name: str, sf_dir: str
+) -> list:
+    """Start ``writer`` with ``Trigger.AvailableNow``, wait for the
+    bounded drain to finish, stop it, and return its progress records.
+
+    The caller owns the semantics: source, sink, output mode and any
+    ``foreachBatch`` body. This runner owns the drain harness, scoped
+    to the drain (the query latches confs at start; restoring them
+    afterwards leaves batch plans untouched):
+
+    * ``DRAIN_SHUFFLE_PARTITIONS`` shuffle partitions;
+    * the state store, chosen by corpus size. Below
+      ``tables.BIG_CORPUS_BYTES`` of source parquet (every local SF and
+      the 10× replica) the default on-heap HDFSBackedStateStoreProvider
+      is kept: 2.1× faster than RocksDB over the five join/watermark
+      drains at sf0.1 (20.8 s vs 44.3 s), since RocksDB pays JNI
+      serialization and a per-store snapshot upload a heap-sized state
+      never needs. At or above it, RocksDB: on the 100× replica the
+      on-heap join state of st_stream_left_outer_wm (60M + 7.5M
+      buffered rows) exhausted a 24 g heap and took the SparkContext
+      down. Results are byte-identical either way;
+    * ``DRAIN_TIMEOUT_S``: a drain that has not finished raises
+      ``TimeoutError`` naming the query, rather than letting the caller
+      read a partial sink. The query is stopped either way.
+    """
+    confs = {"spark.sql.shuffle.partitions": str(DRAIN_SHUFFLE_PARTITIONS)}
+    if tables.corpus_bytes(sf_dir) >= tables.BIG_CORPUS_BYTES:
+        confs["spark.sql.streaming.stateStore.providerClass"] = _ROCKSDB_PROVIDER
+    with scoped_conf(spark, confs):
+        q = writer.trigger(availableNow=True).start()
+        try:
+            if not q.awaitTermination(DRAIN_TIMEOUT_S):
+                raise TimeoutError(
+                    f"{name}: availableNow drain did not finish within "
+                    f"{DRAIN_TIMEOUT_S}s — refusing to read a partial sink"
+                )
+            return [p for p in q.recentProgress if p]
+        finally:
+            q.stop()
+
+
+def data_batches(progress: list) -> int:
+    """Micro-batches of a drain that read at least one row."""
+    return sum(1 for p in progress if p.get("numInputRows", 0) > 0)
+
+
+def require_one_data_batch(progress: list, name: str) -> None:
+    """Fail a drain whose result is only deterministic in ONE data
+    micro-batch (an order-sensitive fold, a watermark frontier, a
+    first batch nothing is late against). ``tables.load_stream`` pins
+    that; this catches a source that splits anyway."""
+    n = data_batches(progress)
+    if n > 1:
+        raise AssertionError(
+            f"{name}: drain took {n} data batches — the single-batch "
+            "assumption is violated; raise maxFilesPerTrigger"
+        )
+
+
+def drain_to_parquet(
+    spark: SparkSession, stream_df: DataFrame, name: str, sf_dir: str
+) -> tuple[DataFrame, list]:
+    """Append-mode drain of a potentially DATA-SIZED streaming output
+    through distributed foreachBatch parquet writes instead of the
+    driver-heap memory sink (a 100× join output is tens of millions of
+    rows). foreachBatch is AT-LEAST-ONCE: an epoch retried after a sink
+    failure redelivers the same batch_id, so each batch writes
+    mode("overwrite") into its OWN ``b<batch_id>`` subdirectory — a
+    redelivery rewrites its own batch instead of double-appending.
+    Batch 0 clears the per-(query, corpus) dest dir first, so each run
+    self-cleans. Returns (DataFrame over the drained rows, progress)."""
+    tag = re.sub(r"[^0-9A-Za-z]+", "_", os.path.basename(os.path.normpath(sf_dir)))
+    dest = f"/tmp/covid_19_fl_spark-drain/{name}_{tag}"
+
+    def write_batch(df: DataFrame, batch_id: int) -> None:
+        if batch_id == 0:
+            shutil.rmtree(dest, ignore_errors=True)
+        df.write.mode("overwrite").parquet(f"{dest}/b{batch_id}")
+
+    writer = stream_df.writeStream.foreachBatch(write_batch).outputMode("append")
+    progress = run_available_now(spark, writer, name, sf_dir)
+    try:
+        # recursiveFileLookup: the per-batch subdirs are plain names
+        # (b0, b1, ...), NOT key=value partition dirs — the drained
+        # frame's schema must stay exactly the stream's schema.
+        drained = spark.read.option("recursiveFileLookup", "true").parquet(dest)
+    except Exception:  # noqa: BLE001 — zero-row drain writes no part files
+        drained = spark.createDataFrame([], stream_df.schema)
+    return drained, progress
 
 
 def dedup_incremental(

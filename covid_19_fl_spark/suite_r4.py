@@ -18,14 +18,15 @@ accumulation across shuffles, doubles only in final rounded ratios.
 
 from __future__ import annotations
 
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .confs import ensure_session_defaults, scoped_conf
+from . import tables
+from .confs import scoped_conf
 from .llmops import similarity
+from .streaming import pipeline as streaming
 from .streaming import stateful
 from .suite import _t, query
 
@@ -36,184 +37,6 @@ from .suite import _t, query
 _CUSUM_TARGET = 120.0
 _CUSUM_SLACK = 10.0
 _CUSUM_THRESHOLD = 5000.0
-
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def _stream_shuffle_partitions(spark: SparkSession, n: int = 16):
-    """Pin a modest shuffle width for a bounded streaming drain.
-
-    Streaming state costs per-PARTITION (a state store instance plus
-    commit/delta files per micro-batch), so a bare 200-partition
-    session spends more on store maintenance than on rows during an
-    availableNow drain (measured 20s → 3.3s at sf0.1 for the
-    stream-stream join). The streaming query latches the value at
-    start; restoring afterwards leaves batch plans untouched. A real
-    cluster sizes this to state volume ÷ target per-store size —
-    the pin is drain-harness tuning, not operator semantics.
-    ``SPARK_GRAFT_STREAM_SHUFFLE`` overrides the default (round 10):
-    the right width is state volume ÷ target per-store size, so scale
-    sweeps raise it (e.g. 64+ at the 100× corpus) without code edits —
-    measured at sf0.1: 8 and 16 equal, 32 is 1.4× slower (per-store
-    fixed cost dominates tiny stores)."""
-    n = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", str(n)))
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(n)}):
-        yield
-
-
-# Estimated decoded-state blowup over parquet bytes (dictionary/RLE
-# decode + JVM object headers + store key/value copies), and the heap
-# budget a corpus-sized on-heap join state may claim. 256 MB of source
-# parquet ≈ 2.5 GB decoded state ≈ 1/6 of the default 16 g driver heap
-# — comfortably on-heap below, RocksDB above. Shared with the
-# iterative-graph cache pins (tables.data_pin_level).
-from .tables import BIG_CORPUS_BYTES as _STATE_ONHEAP_MAX_SRC_BYTES
-from .tables import corpus_bytes as _corpus_bytes
-
-
-@contextmanager
-def _stream_state_store(spark: SparkSession, sf_dir: str):
-    """Scope a SCALE-ADAPTIVE state store provider over a streaming
-    drain (round 11; was unconditionally RocksDB).
-
-    The two regimes, derived from the corpus size the drain buffers
-    (a whole-corpus availableNow stream-stream join holds O(both
-    sides) in state until the batch commits):
-
-    * small corpus (< {_STATE_ONHEAP_MAX_SRC_BYTES} source bytes —
-      every local SF, the 10× replica): the default on-heap
-      HDFSBackedStateStoreProvider. Measured 2.1× faster than RocksDB
-      across the five drain-path queries at sf0.1 (20.8 s vs 44.3 s
-      suite slice): RocksDB pays JNI serialization, memtable flushes,
-      and a full per-store snapshot upload at commit that a
-      heap-sized state never needs.
-    * large corpus (the 100× replica and beyond): RocksDB. The
-      round-9 full 100× sweep measured the alternative —
-      st_stream_left_outer_wm's on-heap join state (60M + 7.5M
-      buffered rows) exhausted a 24 g heap and took the SparkContext
-      down. Executor-local disk with a bounded block cache is the
-      posture every production deployment runs at data-sized state.
-
-    The threshold is a first-principles heap-fit bound (≈10× decode
-    blowup vs 1/6 of the default 16 g heap), not a local-mode tune;
-    ``SPARK_GRAFT_STATE_BACKEND`` (rocksdb | heap | auto) overrides
-    for scale sweeps and A/Bs. Results are byte-identical either way
-    (the oracle pins them); only the state backend changes.
-
-    Round 11 also REVERTED the round-10 changelog-checkpointing +
-    trackTotalNumberOfRows=false knobs (VERDICT r10 ask #2): the
-    driver measured them at 1.79-2.04× slower isolated-normalized
-    (`cleared: false`) — changelog mode defers snapshot consolidation
-    to background maintenance threads whose deferred work cost more
-    than the per-commit delta saved on a one-or-two-commit drain."""
-    backend = os.environ.get("SPARK_GRAFT_STATE_BACKEND", "auto")
-    if backend == "auto":
-        backend = (
-            "heap"
-            if _corpus_bytes(sf_dir) < _STATE_ONHEAP_MAX_SRC_BYTES
-            else "rocksdb"
-        )
-    if backend == "heap":
-        yield  # default HDFSBackedStateStoreProvider
-        return
-    key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    with scoped_conf(spark, {key: rocks}):
-        yield
-
-
-def _drain_to_parquet(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    name: str,
-    sf_dir: str,
-    timeout_sec: int = 600,
-) -> tuple[DataFrame, int]:
-    """availableNow drain of a potentially DATA-SIZED streaming output:
-    RocksDB state store + distributed foreachBatch parquet writes
-    instead of the driver-heap memory sink (a 100× join output is tens
-    of millions of rows — a memory sink materializes all of them in
-    the driver JVM). foreachBatch is AT-LEAST-ONCE: an epoch retried
-    after a sink failure redelivers the same batch_id, so each batch
-    writes mode("overwrite") into its OWN batch_id=N subdirectory —
-    a redelivery rewrites its own partition instead of double-
-    appending rows (idempotent, the K2/exactly-once-ledger posture).
-    Batch 0 clears the per-(query, corpus) dest dir first, so each run
-    self-cleans and /tmp never accumulates across bench passes.
-    Returns (DataFrame over the drained rows, data-batch count) so
-    callers keep their single-batch exactness assertions."""
-    import re as _re
-    import shutil as _sh
-
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", os.path.basename(os.path.normpath(sf_dir)))
-    dest = f"/tmp/covid_19_fl_spark-drain/{name}_{tag}"
-
-    def write_batch(df: DataFrame, batch_id: int) -> None:
-        if batch_id == 0:
-            _sh.rmtree(dest, ignore_errors=True)
-        df.write.mode("overwrite").parquet(f"{dest}/b{batch_id}")
-
-    with _stream_shuffle_partitions(spark), _stream_state_store(spark, sf_dir):
-        q = (
-            stream_df.writeStream.foreachBatch(write_batch)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(timeout_sec):
-                raise TimeoutError(
-                    f"{name}: availableNow drain did not finish within "
-                    f"{timeout_sec}s — refusing to aggregate a partial sink"
-                )
-        finally:
-            data_batches = sum(
-                1 for p in q.recentProgress if p and p.get("numInputRows", 0) > 0
-            )
-            q.stop()
-    try:
-        # recursiveFileLookup: the per-batch subdirs are plain names
-        # (b0, b1, ...), NOT key=value partition dirs — the drained
-        # frame's schema must stay exactly the stream's schema.
-        return (
-            spark.read.option("recursiveFileLookup", "true").parquet(dest),
-            data_batches,
-        )
-    except Exception:  # noqa: BLE001 — zero-row drain writes no part files
-        return (
-            spark.createDataFrame([], stream_df.schema),
-            data_batches,
-        )
-
-
-def _stage_stream_dir(sf_dir: str, table: str) -> str:
-    """File streaming sources need a DIRECTORY; the corpus ships
-    read-only single files — stage a symlink dir under /tmp (no data
-    copy, corpus untouched). One directory PER TABLE: a file-stream
-    source reads every parquet in its directory, so mixing tables in
-    one staging dir would splice mismatched schemas into the stream."""
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(src):
-        # Spark-written table (e.g. the 10x scale corpus): already a
-        # single-table directory of part files — stream it directly.
-        # A symlink to the DIRECTORY inside a staging dir would nest
-        # it one level down where the file-stream source won't list it.
-        return src
-    stage = os.path.join(
-        "/tmp/covid_19_fl_spark-stream-t",
-        sf_dir.strip("/").replace("/", "_"),
-        table,
-    )
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, f"{table}.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    return stage
 
 
 @query(
@@ -273,22 +96,12 @@ def st_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     against Kafka with the state store bounding memory, while the
     batch oracle remains the offline backfill/audit path.
     """
-    stage = _stage_stream_dir(sf_dir, "events")
-    # Same physical-type normalization as tables.load (nanos long vs
-    # micros timestamp_ntz), applied to the STREAM.
-    ensure_session_defaults(spark)
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
     # The CUSUM fold is order-sensitive ACROSS micro-batches: the
     # oracle assumes one global event_id-ordered fold, but the monitor
-    # only sorts within a batch. Pin maxFilesPerTrigger above any
-    # corpus's file count so availableNow drains the whole directory
+    # only sorts within a batch. load_stream drains the whole directory
     # in ONE batch (asserted below) — a multi-batch drain whose files
     # arrive out of event_id order would fold out of order.
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1_000_000)
-        .parquet(stage)
-    )
+    src = tables.load_stream(spark, sf_dir, "events")
     # Integer-floor the value BEFORE the monitor's ×1e6 quantization:
     # floor(value) ≤ 2^53/1e6, so round(float(v)*1e6) is exact and the
     # state fold is bit-identical to the oracle's BIGINT arithmetic.
@@ -307,34 +120,9 @@ def st_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=_CUSUM_THRESHOLD,
     )
     sink = f"st_cusum_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (
-            mon.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(120):
-                raise TimeoutError(
-                    "st_cusum_drift: availableNow drain did not finish "
-                    "within 120s — refusing to read partial update-mode "
-                    "state"
-                )
-        finally:
-            data_batches = sum(
-                1
-                for p in q.recentProgress
-                if p and p.get("numInputRows", 0) > 0
-            )
-            q.stop()
-    if data_batches > 1:
-        raise AssertionError(
-            f"st_cusum_drift: drain took {data_batches} data batches — "
-            "the single-batch fold-order assumption is violated; raise "
-            "maxFilesPerTrigger"
-        )
+    writer = mon.writeStream.format("memory").queryName(sink).outputMode("update")
+    progress = streaming.run_available_now(spark, writer, "st_cusum_drift", sf_dir)
+    streaming.require_one_data_batch(progress, "st_cusum_drift")
     out = spark.table(sink)
     # Final state per key: the update-mode row with the largest n_seen.
     return out.groupBy("key").agg(
@@ -698,32 +486,14 @@ def st_dedup_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the oracle equality is exact (a watermark variant could
     re-admit a duplicate whose first sighting was evicted).
     """
-    stage = _stage_stream_dir(sf_dir, "events")
-    ensure_session_defaults(spark)
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
     src = (
-        spark.readStream.schema(schema)
-        .parquet(stage)
+        tables.load_stream(spark, sf_dir, "events")
         .select("user_id", "event_type")
         .dropDuplicates(["user_id", "event_type"])
     )
     sink = f"st_dedup_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (
-            src.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(120):
-                raise TimeoutError(
-                    "st_dedup_distinct_users: availableNow drain did not "
-                    "finish within 120s — refusing to count a partial sink"
-                )
-        finally:
-            q.stop()
+    writer = src.writeStream.format("memory").queryName(sink).outputMode("append")
+    streaming.run_available_now(spark, writer, "st_dedup_distinct_users", sf_dir)
     return (
         spark.table(sink)
         .groupBy("event_type")
@@ -938,30 +708,24 @@ def st_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Production unbounded streams would add event-time watermarks to
     both sides so the state store evicts matched keys; the bounded
     drain keeps full state to preserve exact oracle equality — which
-    is why it runs on the RocksDB state store and a parquet sink
-    (_drain_to_parquet): full-corpus join state and a data-sized
-    output must live on disk, not the heap (pinned by the round-9
-    full 100× sweep, where the on-heap variant OOM'd).
+    is why it drains through a parquet sink
+    (streaming.drain_to_parquet), and on the RocksDB state store at
+    data-sized corpora: there the join state and the output must live
+    on disk, not the heap (pinned by the round-9 full 100× sweep,
+    where the on-heap variant OOM'd).
     """
-    ostage = _stage_stream_dir(sf_dir, "orders")
-    lstage = _stage_stream_dir(sf_dir, "lineitem")
-    oschema = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).schema
-    lschema = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).schema
     orders = (
-        spark.readStream.schema(oschema)
-        .parquet(ostage)
+        tables.load_stream(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey")
     )
-    items = (
-        spark.readStream.schema(lschema)
-        .parquet(lstage)
-        .select("l_orderkey", "l_returnflag", "l_extendedprice")
+    items = tables.load_stream(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_returnflag", "l_extendedprice"
     )
     joined = items.join(orders, items.l_orderkey == orders.o_orderkey).select(
         "l_returnflag", "l_extendedprice"
     )
-    drained, _ = _drain_to_parquet(
+    drained, _ = streaming.drain_to_parquet(
         spark, joined, "st_stream_stream_join", sf_dir
     )
     return (
@@ -1134,18 +898,11 @@ def st_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound it with a watermark (append mode) — the bounded complete-
     mode drain keeps the oracle equality exact instead.
     """
-    stage = _stage_stream_dir(sf_dir, "events")
-    ensure_session_defaults(spark)
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    src = spark.readStream.schema(schema).parquet(stage)
-    ts_type = schema["ts"].dataType.simpleString()
-    if ts_type in ("bigint", "long"):
-        src = src.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type != "timestamp":
-        src = src.withColumn("ts", F.col("ts").cast("timestamp"))
     # Pre-project to the three columns the session agg consumes so the
     # stream ships no dead columns into the merging-state shuffle.
-    src = src.select("user_id", "ts", "value")
+    src = tables.load_stream(spark, sf_dir, "events").select(
+        "user_id", "ts", "value"
+    )
     agg = (
         src.groupBy(
             F.session_window("ts", "30 minutes").alias("w"), "user_id"
@@ -1166,33 +923,17 @@ def st_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.streaming.sessionWindow.merge.sessions."
         "in.local.partition"
     )
+    # foreachBatch → parquet overwrite instead of a memory sink:
+    # complete mode re-emits the whole session table per micro-batch,
+    # and the memory sink COLLECTS it to the driver — at the 100×
+    # corpus that is >1 GB of sessions and dies on
+    # spark.driver.maxResultSize. Executors write the final table
+    # distributed; the driver never holds it.
+    writer = agg.writeStream.foreachBatch(
+        lambda bdf, _eid: bdf.write.mode("overwrite").parquet(out_dir)
+    ).outputMode("complete")
     with scoped_conf(spark, {_lm_key: "true"}):
-        with _stream_shuffle_partitions(spark):
-            # foreachBatch → parquet overwrite instead of a memory
-            # sink: complete mode re-emits the whole session table per
-            # micro-batch, and the memory sink COLLECTS it to the
-            # driver — at the 100× corpus that is >1 GB of sessions
-            # and dies on spark.driver.maxResultSize. Executors write
-            # the final table distributed; the driver never holds it.
-            q = (
-                agg.writeStream.foreachBatch(
-                    lambda bdf, _eid: bdf.write.mode("overwrite").parquet(
-                        out_dir
-                    )
-                )
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                if not q.awaitTermination(300):
-                    raise TimeoutError(
-                        "st_session_windows: availableNow drain did "
-                        "not finish within 300s — refusing to read a "
-                        "partial complete-mode session table"
-                    )
-            finally:
-                q.stop()
+        streaming.run_available_now(spark, writer, "st_session_windows", sf_dir)
     return spark.read.parquet(out_dir).select(
         "user_id",
         F.col("w.start").alias("session_start"),

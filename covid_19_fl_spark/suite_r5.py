@@ -26,19 +26,14 @@ accumulation across shuffles, doubles only in final rounded ratios.
 
 from __future__ import annotations
 
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .confs import ensure_session_defaults
+from . import tables
+from .streaming import pipeline as streaming
 from .suite import _t, query  # noqa: F401  (_t used by later additions)
-from .suite_r4 import (
-    _drain_to_parquet,
-    _stage_stream_dir,
-    _stream_shuffle_partitions,
-)
 
 # Event-time band for the watermarked join: a lineitem matches its
 # order only if shipped within BAND days of the order date. TPC-H ships
@@ -85,17 +80,8 @@ def st_stream_stream_join_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the difference between O(stream) and O(window) memory on an
     unbounded deployment.
     """
-    ostage = _stage_stream_dir(sf_dir, "orders")
-    lstage = _stage_stream_dir(sf_dir, "lineitem")
-    oschema = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).schema
-    lschema = spark.read.parquet(
-        os.path.join(sf_dir, "lineitem.parquet")
-    ).schema
-    ensure_session_defaults(spark)
     orders = (
-        spark.readStream.schema(oschema)
-        .option("maxFilesPerTrigger", 1_000_000)
-        .parquet(ostage)
+        tables.load_stream(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
         .select(
             "o_orderkey",
@@ -104,9 +90,7 @@ def st_stream_stream_join_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("o_ts", _SSJ_WM_DELAY)
     )
     items = (
-        spark.readStream.schema(lschema)
-        .option("maxFilesPerTrigger", 1_000_000)
-        .parquet(lstage)
+        tables.load_stream(spark, sf_dir, "lineitem")
         .select(
             "l_orderkey",
             "l_returnflag",
@@ -124,19 +108,14 @@ def st_stream_stream_join_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
             <= orders.o_ts + F.expr(f"INTERVAL {_SSJ_BAND_DAYS} DAYS")
         ),
     ).select("l_returnflag", "l_extendedprice")
-    # RocksDB state store + distributed parquet sink: the single-batch
-    # drain holds BOTH sides' full state until commit (the watermark
-    # only evicts afterwards), which is O(corpus) — on-heap state plus
-    # a memory sink OOM'd the round-9 full 100× sweep on the outer twin.
-    drained, data_batches = _drain_to_parquet(
+    # Distributed parquet sink: the single-batch drain holds BOTH
+    # sides' full state until commit (the watermark only evicts
+    # afterwards), which is O(corpus) — on-heap state plus a memory
+    # sink OOM'd the round-9 full 100× sweep on the outer twin.
+    drained, progress = streaming.drain_to_parquet(
         spark, joined, "st_stream_stream_join_wm", sf_dir
     )
-    if data_batches > 1:
-        raise AssertionError(
-            f"st_stream_stream_join_wm: drain took {data_batches} data "
-            "batches — the single-batch no-late-filtering assumption is "
-            "violated; raise maxFilesPerTrigger"
-        )
+    streaming.require_one_data_batch(progress, "st_stream_stream_join_wm")
     return (
         drained
         .groupBy("l_returnflag")
@@ -193,21 +172,9 @@ def st_windowed_counts_append_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract (none exist in the bounded drain, which is why the oracle
     equality is exact rather than approximate).
     """
-    stage = _stage_stream_dir(sf_dir, "events")
-    ensure_session_defaults(spark)
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1_000_000)
-        .parquet(stage)
-    )
-    ts_type = schema["ts"].dataType.simpleString()
-    if ts_type in ("bigint", "long"):
-        src = src.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type != "timestamp":
-        src = src.withColumn("ts", F.col("ts").cast("timestamp"))
     agg = (
-        src.select("ts", "value")
+        tables.load_stream(spark, sf_dir, "events")
+        .select("ts", "value")
         .withWatermark("ts", f"{_WMAGG_DELAY_MIN} minutes")
         .groupBy(F.window("ts", "1 day").alias("w"))
         .agg(
@@ -216,34 +183,11 @@ def st_windowed_counts_append_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = f"st_wmagg_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(120):
-                raise TimeoutError(
-                    "st_windowed_counts_append_wm: availableNow drain "
-                    "did not finish within 120s — refusing to read a "
-                    "partial append-mode sink"
-                )
-        finally:
-            data_batches = sum(
-                1
-                for p in q.recentProgress
-                if p and p.get("numInputRows", 0) > 0
-            )
-            q.stop()
-    if data_batches > 1:
-        raise AssertionError(
-            f"st_windowed_counts_append_wm: drain took {data_batches} "
-            "data batches — the deterministic-watermark assumption is "
-            "violated; raise maxFilesPerTrigger"
-        )
+    writer = agg.writeStream.format("memory").queryName(sink).outputMode("append")
+    progress = streaming.run_available_now(
+        spark, writer, "st_windowed_counts_append_wm", sf_dir
+    )
+    streaming.require_one_data_batch(progress, "st_windowed_counts_append_wm")
     return spark.table(sink).select(
         F.col("w.start").cast("date").alias("event_date"),
         F.col("n_events").cast("long").alias("n_events"),
@@ -1221,44 +1165,17 @@ def st_topk_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     day, mergeable, watermark-evictable in the unbounded deployment.
     The rank window partitions by day (domain-bounded) and never sees
     raw events, only the aggregated state."""
-    import os as _os
-    import uuid as _uuid
-
     from pyspark.sql import Window
 
-    path = _os.path.join(sf_dir, "events.parquet")
-    stage = _stage_stream_dir(sf_dir, "events")
-    ensure_session_defaults(spark)
-    schema = spark.read.parquet(path).schema
-    src = spark.readStream.schema(schema).parquet(stage)
-    ts_type = schema["ts"].dataType.simpleString()
-    if ts_type in ("bigint", "long"):
-        src = src.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type != "timestamp":
-        src = src.withColumn("ts", F.col("ts").cast("timestamp"))
     agg = (
-        src.filter(F.col("user_id").isNotNull())
+        tables.load_stream(spark, sf_dir, "events")
+        .filter(F.col("user_id").isNotNull())
         .groupBy(F.window("ts", "1 day").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
     )
-    sink = f"st_topk_{_uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(120):
-                raise TimeoutError(
-                    "st_topk_windowed: availableNow drain did not finish "
-                    "within 120s — refusing to read a partial "
-                    "complete-mode aggregate"
-                )
-        finally:
-            q.stop()
+    sink = f"st_topk_{uuid.uuid4().hex[:8]}"
+    writer = agg.writeStream.format("memory").queryName(sink).outputMode("complete")
+    streaming.run_available_now(spark, writer, "st_topk_windowed", sf_dir)
     state = spark.table(sink).select(
         F.col("w.start").cast("date").alias("event_date"),
         "user_id",

@@ -28,20 +28,15 @@ pinned empirically rather than assumed.
 
 from __future__ import annotations
 
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .confs import ensure_session_defaults
+from . import tables
 from .llmops.dedup import portable_hash
+from .streaming import pipeline as streaming
 from .suite import _t, query
-from .suite_r4 import (
-    _drain_to_parquet,
-    _stage_stream_dir,
-    _stream_shuffle_partitions,
-)
 
 # ---------------------------------------------------------------------------
 # x_kcore — k-core decomposition of the co-order parts graph
@@ -513,17 +508,8 @@ def st_stream_left_outer_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     its final value and flushes exactly the closed null rows. Scale:
     identical state posture to st_stream_stream_join_wm — per-side
     state holds only the trailing band+delay window."""
-    ostage = _stage_stream_dir(sf_dir, "orders")
-    lstage = _stage_stream_dir(sf_dir, "lineitem")
-    oschema = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).schema
-    lschema = spark.read.parquet(
-        os.path.join(sf_dir, "lineitem.parquet")
-    ).schema
-    ensure_session_defaults(spark)
     orders = (
-        spark.readStream.schema(oschema)
-        .option("maxFilesPerTrigger", 1_000_000)
-        .parquet(ostage)
+        tables.load_stream(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
         .select(
             "o_orderkey",
@@ -532,9 +518,7 @@ def st_stream_left_outer_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("o_ts", _LOJ_WM_DELAY)
     )
     items = (
-        spark.readStream.schema(lschema)
-        .option("maxFilesPerTrigger", 1_000_000)
-        .parquet(lstage)
+        tables.load_stream(spark, sf_dir, "lineitem")
         .select(
             "l_orderkey",
             "l_returnflag",
@@ -553,21 +537,16 @@ def st_stream_left_outer_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "left_outer",
     ).select("l_returnflag", "l_extendedprice")
-    # RocksDB state store + distributed parquet sink: this drain's
-    # single data batch buffers BOTH sides in join state before any
-    # eviction — at the round-9 full 100× sweep the on-heap default
-    # (HDFSBackedStateStore) exhausted a 24g heap right here and took
-    # the SparkContext down; the production provider + a non-driver
-    # sink is the fix, not a bigger heap.
-    drained, data_batches = _drain_to_parquet(
+    # Distributed parquet sink: this drain's single data batch buffers
+    # BOTH sides in join state before any eviction — at the round-9
+    # full 100× sweep the on-heap default (HDFSBackedStateStore)
+    # exhausted a 24g heap right here and took the SparkContext down;
+    # the runner's RocksDB choice at that size + a non-driver sink is
+    # the fix, not a bigger heap.
+    drained, progress = streaming.drain_to_parquet(
         spark, joined, "st_stream_left_outer_wm", sf_dir
     )
-    if data_batches > 1:
-        raise AssertionError(
-            f"st_stream_left_outer_wm: drain took {data_batches} data "
-            "batches — the single-batch no-late-filtering assumption is "
-            "violated; raise maxFilesPerTrigger"
-        )
+    streaming.require_one_data_batch(progress, "st_stream_left_outer_wm")
     return (
         drained
         .groupBy(
@@ -627,21 +606,9 @@ def st_sliding_counts_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     state stays bounded by the watermark horizon, finalized windows
     leave the store on emit. The same plan pointed at Kafka is the
     canonical trailing-48h dashboard feed."""
-    stage = _stage_stream_dir(sf_dir, "events")
-    ensure_session_defaults(spark)
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1_000_000)
-        .parquet(stage)
-    )
-    ts_type = schema["ts"].dataType.simpleString()
-    if ts_type in ("bigint", "long"):
-        src = src.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type != "timestamp":
-        src = src.withColumn("ts", F.col("ts").cast("timestamp"))
     agg = (
-        src.select("ts", "value")
+        tables.load_stream(spark, sf_dir, "events")
+        .select("ts", "value")
         .withWatermark("ts", f"{_SLIDE_DELAY_MIN} minutes")
         .groupBy(F.window("ts", "2 days", "1 day").alias("w"))
         .agg(
@@ -650,34 +617,11 @@ def st_sliding_counts_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = f"st_slide_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(120):
-                raise TimeoutError(
-                    "st_sliding_counts_wm: availableNow drain did not "
-                    "finish within 120s — refusing to read a partial "
-                    "append-mode sink"
-                )
-        finally:
-            data_batches = sum(
-                1
-                for p in q.recentProgress
-                if p and p.get("numInputRows", 0) > 0
-            )
-            q.stop()
-    if data_batches > 1:
-        raise AssertionError(
-            f"st_sliding_counts_wm: drain took {data_batches} data "
-            "batches — the deterministic-watermark assumption is "
-            "violated; raise maxFilesPerTrigger"
-        )
+    writer = agg.writeStream.format("memory").queryName(sink).outputMode("append")
+    progress = streaming.run_available_now(
+        spark, writer, "st_sliding_counts_wm", sf_dir
+    )
+    streaming.require_one_data_batch(progress, "st_sliding_counts_wm")
     return spark.table(sink).select(
         F.col("w.start").alias("win_start"),
         F.col("n_events").cast("long").alias("n_events"),

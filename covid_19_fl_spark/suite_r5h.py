@@ -220,17 +220,14 @@ def st_cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles on k once and rewrites the k-sized table; a production
     run partitions the table by key range so the merge rewrites only
     touched partitions."""
-    import os as _os
     import uuid as _uuid
 
+    from . import tables
     from .sinks.batch import ParquetTable
-    from .suite_r4 import _stage_stream_dir
+    from .streaming import pipeline as streaming
 
-    stage = _stage_stream_dir(sf_dir, "orders")
-    schema = spark.read.parquet(_os.path.join(sf_dir, "orders.parquet")).schema
     src = (
-        spark.readStream.schema(schema)
-        .parquet(stage)
+        tables.load_stream(spark, sf_dir, "orders")
         .select(
             (F.col("o_orderkey") % 1000).cast("long").alias("k"),
             F.col("o_orderkey").cast("long").alias("w"),
@@ -260,19 +257,9 @@ def st_cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             table.overwrite(b)
 
-    q = (
-        src.writeStream.foreachBatch(apply)
-        .trigger(availableNow=True)
-        .start()
+    streaming.run_available_now(
+        spark, src.writeStream.foreachBatch(apply), "st_cdc_merge_upsert", sf_dir
     )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError(
-                "st_cdc_merge_upsert: availableNow drain did not finish "
-                "within 300s — refusing to read a partial merge table"
-            )
-    finally:
-        q.stop()
     return table.read().select("k", "last_writer", "price_c", "n_versions")
 
 

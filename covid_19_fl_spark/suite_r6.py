@@ -21,7 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from .confs import ensure_session_defaults
+from . import tables
+from .streaming import pipeline as streaming
 from .suite import _t, query
 
 _TOP_M = 3
@@ -332,9 +333,10 @@ def x_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-10 neighbor-array generate could not be split and measured
     slower), the center degree is attached to the 2|E|-row adjacency
     BEFORE the wedge join instead of a wedge-sized join after it, and
-    the adjacency anti-join probes the (u, w) AGGREGATE rather than
-    the raw wedge stream (operators/graph.ra_link_scores — full
-    accounting in its docstring). RA still folds each
+    the broadcast adjacency anti-join probes the RAW wedge stream
+    before the (u, w) aggregation, pruning wedges that close into
+    triangles before they are buffered (operators/graph.ra_link_scores
+    — full accounting in its docstring). RA still folds each
     pair's SORTED degree list sequentially — the order-pinned
     summation both engines replay bit-for-bit before the 6dp round.
     Output is the global top-50 by (RA, CN) via
@@ -700,15 +702,8 @@ def st_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch, the aggregate state stays |dim|-bounded."""
     import uuid as _uuid
 
-    from .suite_r4 import _stage_stream_dir, _stream_shuffle_partitions
-
     nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    ensure_session_defaults(spark)
-    # ts is unused here, but the schema read must survive both parquet
-    # physical types the corpus has shipped (nanos long / micros).
-    ensure_session_defaults(spark)
-    stage = _stage_stream_dir(sf_dir, "events")
-    src = spark.readStream.schema(spark.read.parquet(stage).schema).parquet(stage)
+    src = tables.load_stream(spark, sf_dir, "events")
     enriched = src.withColumn(
         "nk", F.pmod(F.col("user_id"), F.lit(25)).cast("int")
     ).join(F.broadcast(nation), F.col("nk") == F.col("n_nationkey"))
@@ -717,22 +712,8 @@ def st_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("value").cast("decimal(28,4)")).alias("tv"),
     )
     sink = f"st_enrich_{_uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(120):
-                raise TimeoutError(
-                    "st_stream_static_enrich: availableNow drain did not "
-                    "finish within 120s"
-                )
-        finally:
-            q.stop()
+    writer = agg.writeStream.format("memory").queryName(sink).outputMode("complete")
+    streaming.run_available_now(spark, writer, "st_stream_static_enrich", sf_dir)
     return spark.table(sink).select(
         "n_name", "n_events", F.col("tv").cast("double").alias("total_value")
     )

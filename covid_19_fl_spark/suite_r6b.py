@@ -489,14 +489,12 @@ def st_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     mostly-distinct 100 TB corpus is a corpus-sized driver collect.
     Executors write survivors distributed; the driver only ever sees
     the ≤|langs|-row final rollup."""
-    import os
     import uuid
 
+    from . import tables
     from .llmops import dedup
-    from .suite_r4 import _stage_stream_dir, _stream_shuffle_partitions
+    from .streaming import pipeline as streaming
 
-    stage = _stage_stream_dir(sf_dir, "documents")
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
     sig = F.concat_ws(
         "-",
         F.transform(
@@ -504,29 +502,15 @@ def st_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     src = (
-        spark.readStream.schema(schema)
-        .parquet(stage)
+        tables.load_stream(spark, sf_dir, "documents")
         .select("lang", sig.alias("sig"))
         .dropDuplicates(["lang", "sig"])
     )
     out_dir = f"/tmp/st_mh_dedup_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (
-            src.writeStream.foreachBatch(
-                lambda bdf, _eid: bdf.write.mode("append").parquet(out_dir)
-            )
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(120):
-                raise TimeoutError(
-                    "st_minhash_dedup: availableNow drain did not finish "
-                    "within 120s — refusing to count a partial sink"
-                )
-        finally:
-            q.stop()
+    writer = src.writeStream.foreachBatch(
+        lambda bdf, _eid: bdf.write.mode("append").parquet(out_dir)
+    ).outputMode("append")
+    streaming.run_available_now(spark, writer, "st_minhash_dedup", sf_dir)
     return (
         spark.read.parquet(out_dir)
         .groupBy("lang")

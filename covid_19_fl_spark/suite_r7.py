@@ -784,14 +784,12 @@ def st_exactly_once_batchid(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates (bounded |langs| rows per batch), executors write them
     distributed, and the driver only sees the final ≤|langs|-row
     rollup. Replays cost one partition rewrite, never a table scan."""
-    import os
     import uuid
 
-    from .suite_r4 import _stage_stream_dir, _stream_shuffle_partitions
+    from . import tables
+    from .streaming import pipeline as streaming
 
-    stage = _stage_stream_dir(sf_dir, "documents")
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    src = spark.readStream.schema(schema).parquet(stage).select("lang", "n_chars")
+    src = tables.load_stream(spark, sf_dir, "documents").select("lang", "n_chars")
     ledger = f"/tmp/st_eo_ledger_{uuid.uuid4().hex[:8]}"
     redelivered = {"done": False}
 
@@ -816,22 +814,9 @@ def st_exactly_once_batchid(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     ow_key = "spark.sql.sources.partitionOverwriteMode"
+    writer = src.writeStream.foreachBatch(sink).outputMode("append")
     with scoped_conf(spark, {ow_key: "dynamic"}):
-        with _stream_shuffle_partitions(spark):
-            q = (
-                src.writeStream.foreachBatch(sink)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                if not q.awaitTermination(120):
-                    raise TimeoutError(
-                        "st_exactly_once_batchid: availableNow drain did "
-                        "not finish within 120s — refusing a partial ledger"
-                    )
-            finally:
-                q.stop()
+        streaming.run_available_now(spark, writer, "st_exactly_once_batchid", sf_dir)
     return (
         spark.read.parquet(ledger)
         .groupBy("lang")

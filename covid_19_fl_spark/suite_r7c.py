@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from .confs import ensure_session_defaults
 from .llmops import text as T
 from .suite import _t, query
 
@@ -415,9 +414,8 @@ def st_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time
     import uuid
 
-    from .suite_r4 import _stream_shuffle_partitions
+    from .streaming import pipeline as streaming
 
-    ensure_session_defaults(spark)
     ev = _t(spark, sf_dir, "events").select("event_id", "ts")
     [mrow] = ev.agg(F.max("ts").alias("m")).collect()
     tick_day = mrow.m.replace(hour=0, minute=0, second=0, microsecond=0)
@@ -458,24 +456,9 @@ def st_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
     )
     sink = f"st_late_audit_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(180):
-                raise TimeoutError(
-                    "st_late_data_audit: availableNow drain did not "
-                    "finish within 180s — refusing a partial sink"
-                )
-        finally:
-            progress = [p for p in q.recentProgress if p]
-            q.stop()
-    data_batches = sum(1 for p in progress if p.get("numInputRows", 0) > 0)
+    writer = agg.writeStream.format("memory").queryName(sink).outputMode("append")
+    progress = streaming.run_available_now(spark, writer, "st_late_data_audit", sf_dir)
+    data_batches = streaming.data_batches(progress)
     if data_batches != 3:
         raise AssertionError(
             f"st_late_data_audit: drain took {data_batches} data "

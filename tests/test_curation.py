@@ -60,20 +60,31 @@ def test_curation_funnel(spark, corpus, eval_set):
     assert funnel["sampled"] == 2  # no sample_pct → pass-through
 
 
-@pytest.mark.parametrize(
-    "cfg",
-    [
-        curation.CurationConfig(
-            min_quality=0.3, min_tokens=5, near_dup_threshold=0.4
-        ),
-        curation.CurationConfig(
-            min_quality=0.3, min_tokens=5, near_dup_threshold=0.4, sample_pct=50
-        ),
-        curation.CurationConfig(min_quality=0.0, min_tokens=1),
-    ],
-    ids=["default", "with-sample", "keep-all"],
+_DEFAULT_CFG = curation.CurationConfig(
+    min_quality=0.3, min_tokens=5, near_dup_threshold=0.4
 )
-def test_funnel_counts_matches_funnel_report(spark, corpus, eval_set, cfg, request):
+
+
+@pytest.mark.parametrize(
+    "cfg, with_bench",
+    [
+        pytest.param(_DEFAULT_CFG, False, id="default-no-bench"),
+        pytest.param(_DEFAULT_CFG, True, id="default-bench"),
+        pytest.param(
+            curation.CurationConfig(
+                min_quality=0.3, min_tokens=5, near_dup_threshold=0.4, sample_pct=50
+            ),
+            False,
+            id="with-sample-no-bench",
+        ),
+        pytest.param(
+            curation.CurationConfig(min_quality=0.0, min_tokens=1),
+            False,
+            id="keep-all-no-bench",
+        ),
+    ],
+)
+def test_funnel_counts_matches_funnel_report(spark, corpus, eval_set, cfg, with_bench):
     """The round-10 single-pass funnel (one conditional aggregation
     over survivor flags) must report row-for-row what the six-leg
     union over curate() stages reports — with and without a benchmark
@@ -81,17 +92,16 @@ def test_funnel_counts_matches_funnel_report(spark, corpus, eval_set, cfg, reque
     cfg only (round 11): the decontamination flag is independent of
     the sample/keep-all knobs, and each leg is four full LSH+CC
     pipeline executions of pytest wall."""
-    benches = (None, eval_set) if request.node.callspec.id == "default" else (None,)
-    for bench in benches:
-        expected = sorted(
-            (r.stage_order, r.stage, r.n_docs)
-            for r in curation.funnel_report(curation.curate(corpus, bench, cfg)).collect()
-        )
-        got = sorted(
-            (r.stage_order, r.stage, r.n_docs)
-            for r in curation.funnel_counts(corpus, bench, cfg).collect()
-        )
-        assert got == expected
+    bench = eval_set if with_bench else None
+    expected = sorted(
+        (r.stage_order, r.stage, r.n_docs)
+        for r in curation.funnel_report(curation.curate(corpus, bench, cfg)).collect()
+    )
+    got = sorted(
+        (r.stage_order, r.stage, r.n_docs)
+        for r in curation.funnel_counts(corpus, bench, cfg).collect()
+    )
+    assert got == expected
 
 
 def test_funnel_counts_empty_corpus(spark):

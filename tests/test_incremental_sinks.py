@@ -100,6 +100,24 @@ def test_overwrite_count_delta(spark, table):
     assert table.read().count() == 4
 
 
+def test_recover_orphaned_restores_table_after_crash(spark, table):
+    """A crash between _swap's two renames leaves no table, only the
+    renamed-away ``.old-*`` sibling; recovery puts it back once. With
+    several orphans the newest wins, although the random suffix of an
+    older one may sort after it."""
+    import os
+
+    table.overwrite(_df(spark, INCOMING))
+    os.rename(table.path, table.path + ".old-ffffffff")
+    os.utime(table.path + ".old-ffffffff", (1, 1))
+    table.overwrite(_df(spark, BASE))
+    os.rename(table.path, table.path + ".old-00000000")
+    assert not table.exists()
+    assert table.recover_orphaned() is True
+    assert sorted(r.case_number for r in table.read().collect()) == [1, 2, 3]
+    assert table.recover_orphaned() is False
+
+
 def test_delete_where_and_replace_where(spark, table):
     rows = [(d, float(c), s) for d, c, s in
             [("2020-03-01", 1.0, "actual"), ("2020-03-02", 3.0, "actual"),

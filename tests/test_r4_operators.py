@@ -3,6 +3,7 @@ DuckDB-oracle equality the suite tests already enforce."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from covid_19_fl_spark import suite
@@ -101,17 +102,22 @@ def test_ols_normal_eq_recovers_planted_line(spark):
     assert round(det2 / det, 6) == -5.0
 
 
-def test_stream_shuffle_partition_pin_restores_on_error(spark):
-    import covid_19_fl_spark.suite_r4 as r4
+def test_stream_shuffle_partition_pin_restores_on_error(spark, sf_dir):
+    from covid_19_fl_spark.confs import scoped_conf
+    from covid_19_fl_spark.streaming import pipeline
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        with r4._stream_shuffle_partitions(spark, 7):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+    class FailingWriter:
+        def trigger(self, **_kw):
+            return self
+
+        def start(self):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "16"
             raise RuntimeError("boom")
-    except RuntimeError:
-        pass
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "7"}):
+        with pytest.raises(RuntimeError, match="boom"):
+            pipeline.run_available_now(spark, FailingWriter(), "t", sf_dir)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
 
 
 def test_stage_stream_dir_layouts(tmp_path):
@@ -120,7 +126,7 @@ def test_stage_stream_dir_layouts(tmp_path):
     part files below where the file-stream source lists)."""
     import os
 
-    from covid_19_fl_spark.suite_r4 import _stage_stream_dir
+    from covid_19_fl_spark.tables import _stage_stream_dir
 
     sf = tmp_path / "sf"
     sf.mkdir()

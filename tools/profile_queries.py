@@ -1,14 +1,14 @@
-"""Round-10 optimization profiler.
+"""Isolated-query profiler.
 
 Times individual registered queries in ISOLATION (warmup + N timed
 repeats, min kept — the same steady-state methodology as bench.py) and
-captures ``.explain("formatted")`` output to ``plans/r10/<name>_<tag>.txt``
-for the optimization round's before/after evidence.
+captures ``.explain("formatted")`` output to ``plans/profile/<name>_<tag>.txt``
+as before/after plan evidence.
 
 Usage:
-    python tools/profile_r10.py --tag before q1 q2 ...
-    python tools/profile_r10.py --tag after --repeats 3 cur_funnel
-    python tools/profile_r10.py --plan-only --tag before cur_funnel
+    python tools/profile_queries.py --tag before q1 q2 ...
+    python tools/profile_queries.py --tag after --repeats 3 cur_funnel
+    python tools/profile_queries.py --plan-only --tag before cur_funnel
 
 Prints one JSON line per query: {"query": ..., "sec": min, "runs": [...]}.
 """
@@ -38,9 +38,9 @@ def main() -> None:
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
-    spark = get_spark("covid_19_fl_spark-profile-r10")
+    spark = get_spark("covid_19_fl_spark-profile")
     plans_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r10"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "profile"
     )
     os.makedirs(plans_dir, exist_ok=True)
 
@@ -50,7 +50,7 @@ def main() -> None:
             print(json.dumps({"query": name, "error": "unknown"}))
             continue
         fn = suite.QUERIES[name]
-        spark.sparkContext.setJobDescription(f"r10-profile: {name}")
+        spark.sparkContext.setJobDescription(f"profile: {name}")
         if args.tag:
             df = fn(spark, args.sf_dir)
             buf = io.StringIO()
@@ -59,7 +59,7 @@ def main() -> None:
             with open(os.path.join(plans_dir, f"{name}_{args.tag}.txt"), "w") as fh:
                 fh.write(buf.getvalue())
         if args.plan_only:
-            print(json.dumps({"query": name, "plan": f"plans/r10/{name}_{args.tag}.txt"}))
+            print(json.dumps({"query": name, "plan": f"plans/profile/{name}_{args.tag}.txt"}))
             continue
         runs = []
         # warmup
